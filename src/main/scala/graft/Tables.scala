@@ -129,8 +129,8 @@ object Tables {
     * r17: the pair/iterative family runs 1.3–2.2× slower on local[32]
     * than local[8] at sf0.1 purely from fixed 32-partition clustered
     * checkpoints). Derive the count from the frame's LEAF input bytes
-    * instead — ~1 partition per MB of compressed input
-    * (spark.graft.cluster.bytesPerPart), clamped to
+    * instead — one partition per [[ClusterBytesPerPart]] (128 KB) of
+    * compressed input, clamped to
     * [1, spark.sql.shuffle.partitions] — so at production scale
     * (≥ tens of MB per table) the clamp lands on the session
     * parallelism and plans are IDENTICAL to the old constant, while
@@ -142,11 +142,13 @@ object Tables {
     val cap = s.conf.get("spark.sql.shuffle.partitions").toInt
     val files = df.inputFiles
     if (files.isEmpty || files.length >= 512) return cap
-    val perPart = s.conf.get("spark.graft.cluster.bytesPerPart",
-      (128L << 10).toString).toLong
     val bytes = files.iterator.map(statOf(s, _)._1).sum
-    math.max(1, math.min(cap.toLong, (bytes + perPart - 1) / perPart)).toInt
+    math.max(1, math.min(cap.toLong,
+      (bytes + ClusterBytesPerPart - 1) / ClusterBytesPerPart)).toInt
   }
+
+  /** Compressed input bytes per [[clusterParts]] partition. */
+  val ClusterBytesPerPart: Long = 128L << 10
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")

@@ -1,6 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Dataset
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** House localCheckpoint: eager + MEMORY_AND_DISK_SER.
@@ -48,11 +51,18 @@ object Cp {
       out
     }
 
+  /** Id sets of the generation scopes ([[owned]], [[scoped]]) open on
+    * this thread, innermost first. */
+  private val open = ThreadLocal.withInitial[List[mutable.Set[Int]]](() => Nil)
+
   def local[T](ds: Dataset[T]): Dataset[T] = {
     if (recording) synchronized {
       if (recording) recorded += ds.queryExecution.sparkPlan
     }
-    ds.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+    val out = ds.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+    // the persisted RDD is the one the checkpointed plan reads
+    open.get.foreach(_ += out.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id)
+    out
   }
 
   /** Checkpoint MATERIALIZED AND DECLARED clustered by `cols`.
@@ -111,33 +121,64 @@ object Cp {
     org.apache.spark.sql.graft.Bridge.claimClustered(
       local(df), nPart, cols, sorted)
 
-  /** One-shot checkpoint hygiene for SIDE-EFFECTING verbs (the
-    * append/ensure store maintenance family): run `body`, then drop
-    * every localCheckpoint block it created. The append verbs
-    * checkpoint intermediate frames (batch reps, novelty hits, capped
-    * edges) that are fully consumed by their eager writes — but the
-    * blocks themselves survive the call (MEMORY_AND_DISK_SER, reaped
-    * only on a driver GC), so a multi-cycle ingest/soak driver
-    * accumulates a generation per cycle until the heap forces the
-    * collection — the same checkpoint-retention OOM class
-    * [[dropGeneration]] exists for, one call-shape out. ONLY safe when
-    * `body`'s RESULT does not reference the checkpoints (Unit-returning
-    * appends, ensure* returning a table name); a verb returning a lazy
-    * DataFrame over its checkpoint must keep the generation alive. */
-  def scoped[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val before = s.sparkContext.getPersistentRDDs.keySet
-    try body
-    finally dropGeneration(s, s.sparkContext.getPersistentRDDs.keySet -- before)
+  /** Run `body` with `ids` open as a generation scope on this thread. */
+  private def inScope[T](ids: mutable.Set[Int])(body: => T): T = {
+    open.set(ids :: open.get)
+    try body finally open.set(open.get.tail)
   }
 
-  /** Iterative-round checkpoint hygiene: drop a DEAD generation's
-    * localCheckpoint blocks by RDD id. Eager localCheckpoints truncate
-    * lineage, so dropped blocks are unrecoverable — callers must only
-    * pass ids no live plan references. Without this an N-round loop
-    * pins N generations of checkpointed state until the ContextCleaner
-    * GCs them — which at 100× SF is after the OOM, not before. */
-  def dropGeneration(s: org.apache.spark.sql.SparkSession,
-                     ids: scala.collection.Set[Int]): Unit =
+  /** Run `body` and return its result with the ids of the RDDs that
+    * [[local]] persisted ON THIS THREAD while it ran, nested scopes
+    * included. Checkpoints taken by other threads in the same window
+    * are never claimed: ownership is per thread and by id. */
+  def owned[T](body: => T): (T, Set[Int]) = {
+    val ids = mutable.Set.empty[Int]
+    (inScope(ids)(body), ids.toSet)
+  }
+
+  /** One-shot checkpoint hygiene for SIDE-EFFECTING verbs (the
+    * append/ensure store maintenance family): run `body`, then drop
+    * the checkpoints it [[owned]] — those [[local]] took on this
+    * thread while `body` ran, also when `body` throws. The append
+    * verbs checkpoint intermediate frames (batch reps, novelty hits,
+    * capped edges) that are fully consumed by their eager writes, but
+    * the blocks outlive the call (MEMORY_AND_DISK_SER, reaped only on
+    * a driver GC), so a multi-cycle ingest/soak driver would hold a
+    * generation per cycle until the heap forces the collection.
+    * Checkpoints a concurrent query takes on another thread are not
+    * this scope's and stay live. ONLY safe when `body`'s RESULT does
+    * not reference its checkpoints (Unit-returning appends, ensure*
+    * returning a table name); a verb returning a lazy DataFrame over
+    * its checkpoint must keep the generation alive. */
+  def scoped[T](s: SparkSession)(body: => T): T = {
+    val ids = mutable.Set.empty[Int]
+    try inScope(ids)(body) finally dropGeneration(s, ids)
+  }
+
+  /** Rolling generations for an iterative loop: each call runs `body`
+    * [[owned]], then drops the PREVIOUS call's generation — dead once
+    * `body`'s eager checkpoints have materialized its successor. So at
+    * most two generations are live, and the last stays live for the
+    * loop's result. Any action that still reads the previous
+    * generation must run inside `body`. */
+  final class Rolling(s: SparkSession) {
+    private var prev = Set.empty[Int]
+    def apply[T](body: => T): T = {
+      val (out, ids) = owned(body)
+      dropGeneration(s, prev)
+      prev = ids
+      out
+    }
+  }
+
+  /** Drop a DEAD generation's checkpoint blocks by RDD id. Eager
+    * localCheckpoints truncate lineage, so dropped blocks are
+    * unrecoverable: pass only ids from [[owned]] (or a [[scoped]] /
+    * [[Rolling]] body) that no live plan references. Without this an
+    * N-round loop pins N generations of checkpointed state until the
+    * ContextCleaner GCs them, which at 100× SF is after the OOM (the
+    * q_kcore sf10 executor OOM). */
+  def dropGeneration(s: SparkSession, ids: scala.collection.Set[Int]): Unit =
     s.sparkContext.getPersistentRDDs
       .filter { case (id, _) => ids(id) }
       .values.foreach(_.unpersist(blocking = false))

@@ -626,25 +626,25 @@ object Dedup {
     * built — SharedPairsSpec asserts equality and instance reuse;
     * measured 1.92× over 4 consumers at sf0.1);
     * (2) consumers must MATERIALIZE within `body` — on exit the
-    * build's checkpoint blocks are dropped (generation hygiene, the
-    * [[Cp.dropGeneration]] rule); (3) NOT used by Bench: the
+    * checkpoints the build [[graft.functions.Cp.owned]] are dropped
+    * ([[graft.functions.Cp.dropGeneration]]); consumers that own their
+    * [[jaccardPairs]] call own nothing here, so they never drop the
+    * shared build; (3) NOT used by Bench: the
     * per-query isolation contract there prices each query standalone.
     * Not re-entrant per (session, dir). */
   def withSharedPairs[T](s: SparkSession, d: String)(body: => T): T = {
     val key = (s, d)
-    val sc = s.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     // cappedSizes on: the shared table serves EVERY consumer incl.
     // containment, and the szr joins are a one-time build cost here
-    val pairs = jaccardPairsOf(Tables.documents(s, d), cappedSizes = true)
-      .transform(graft.functions.Cp.local)
-    val gen = sc.getPersistentRDDs.keySet -- before
+    val (pairs, gen) = graft.functions.Cp.owned(
+      jaccardPairsOf(Tables.documents(s, d), cappedSizes = true)
+        .transform(graft.functions.Cp.local))
     require(sharedPairs.putIfAbsent(key, pairs) == null,
       s"withSharedPairs already active for $d in this session")
     try body
     finally {
       sharedPairs.remove(key)
-      dropGeneration(s, gen)
+      graft.functions.Cp.dropGeneration(s, gen)
     }
   }
 
@@ -884,41 +884,42 @@ object Dedup {
     var i = 0
     // round hygiene: the original `edges` checkpoint is PROTECTED (the
     // final `nodes` join reads it); per-round large/small generations
-    // are dropped one round after they die (dropGeneration scaladoc)
-    val ccSc = edges.sparkSession.sparkContext
-    var prevGen: scala.collection.Set[Int] = Set.empty[Int]
+    // are dropped one round after they die (Cp.Rolling)
+    val roll = new graft.functions.Cp.Rolling(edges.sparkSession)
     while (!converged && i < maxIter && edgeCount > localFinishMaxEdges) {
-      val beforeRound = ccSc.getPersistentRDDs.keySet
-      // large-star: group by each endpoint; attach every LARGER
-      // neighbor to min(neighbors ∪ self)
-      val dir = edges.union(edges.select($"v".as("u"), $"u".as("v")))
-      val largeMins = dir.groupBy($"u").agg(min($"v").as("mn"))
-        .select($"u", least($"u", $"mn").as("m"))
-      val large = dir.join(largeMins, "u").filter($"v" > $"u")
-        .select(least($"v", $"m").as("u"), greatest($"v", $"m").as("v"))
-        .filter($"u" =!= $"v").distinct()
-        .transform(graft.functions.Cp.local)
-      // small-star: group by the larger endpoint; attach it and every
-      // smaller neighbor to the smallest neighbor
-      val smallMins = large.groupBy($"v".as("c")).agg(min($"u").as("m"))
-      val joined = large.join(smallMins, $"v" === $"c")
-      val small = joined.select($"u".as("a"), $"m".as("b"))
-        .union(joined.select($"v".as("a"), $"m".as("b")))
-        .select(least($"a", $"b").as("u"), greatest($"a", $"b").as("v"))
-        .filter($"u" =!= $"v").distinct()
-        .transform(graft.functions.Cp.local)
-      // fixpoint = edge set unchanged. Both sides are distinct sets, so
-      // equal counts + one-sided containment (small ⊆ edges) is an EXACT
-      // set-equality check at half the cost of a symmetric difference.
-      // left_anti (not except) skips re-distincting two already-distinct
-      // checkpointed sets; the carried edgeCount makes the count half free.
-      val smallCount = small.count()
-      converged = smallCount == edgeCount &&
-        small.join(edges, Seq("u", "v"), "left_anti").isEmpty
+      // the fixpoint test reads the previous generation: it runs inside
+      // the rolled step, before that generation is dropped
+      val (small, smallCount) = roll {
+        // large-star: group by each endpoint; attach every LARGER
+        // neighbor to min(neighbors ∪ self)
+        val dir = edges.union(edges.select($"v".as("u"), $"u".as("v")))
+        val largeMins = dir.groupBy($"u").agg(min($"v").as("mn"))
+          .select($"u", least($"u", $"mn").as("m"))
+        val large = dir.join(largeMins, "u").filter($"v" > $"u")
+          .select(least($"v", $"m").as("u"), greatest($"v", $"m").as("v"))
+          .filter($"u" =!= $"v").distinct()
+          .transform(graft.functions.Cp.local)
+        // small-star: group by the larger endpoint; attach it and every
+        // smaller neighbor to the smallest neighbor
+        val smallMins = large.groupBy($"v".as("c")).agg(min($"u").as("m"))
+        val joined = large.join(smallMins, $"v" === $"c")
+        val small = joined.select($"u".as("a"), $"m".as("b"))
+          .union(joined.select($"v".as("a"), $"m".as("b")))
+          .select(least($"a", $"b").as("u"), greatest($"a", $"b").as("v"))
+          .filter($"u" =!= $"v").distinct()
+          .transform(graft.functions.Cp.local)
+        // fixpoint = edge set unchanged. Both sides are distinct sets, so
+        // equal counts + one-sided containment (small ⊆ edges) is an EXACT
+        // set-equality check at half the cost of a symmetric difference.
+        // left_anti (not except) skips re-distincting two already-distinct
+        // checkpointed sets; the carried edgeCount makes the count half free.
+        val smallCount = small.count()
+        converged = smallCount == edgeCount &&
+          small.join(edges, Seq("u", "v"), "left_anti").isEmpty
+        (small, smallCount)
+      }
       edgeCount = smallCount
       edges = small
-      dropGeneration(edges.sparkSession, prevGen)
-      prevGen = ccSc.getPersistentRDDs.keySet -- beforeRound
       i += 1
     }
     if (!converged && edgeCount <= localFinishMaxEdges) {
@@ -1262,17 +1263,6 @@ object Dedup {
   private val KcoreK = 2     // core order
   private val KcorePeels = 8 // simultaneous peel rounds, oracle-mirrored
 
-  /** Iterative-round checkpoint hygiene: drop a DEAD generation's
-    * localCheckpoint blocks by RDD id. Eager localCheckpoints truncate
-    * lineage, so dropped blocks are unrecoverable — callers must only
-    * pass ids no live plan references. Without this, an N-round loop
-    * pins N generations of checkpointed edges and an 8 g heap dies at
-    * sf10 (observed: q_kcore executor OOM); with it, at most two
-    * generations are ever live. The ContextCleaner would eventually GC
-    * them, but "eventually" is after the OOM. */
-  private def dropGeneration(s: SparkSession, ids: scala.collection.Set[Int]): Unit =
-    graft.functions.Cp.dropGeneration(s, ids)
-
   /** K-CORE EXTRACTION over the near-dup graph — the density filter
     * graph curation uses above connected components (a CC can be a
     * long fragile chain; the 2-core keeps only docs embedded in
@@ -1289,28 +1279,21 @@ object Dedup {
     * checksum, so the oracle match proves every surviving vertex. */
   def qKcore(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val und = jaccardPairs(s, d)
+    // the pair-pipeline checkpoints (none inside withSharedPairs) are
+    // the first generation: dead once the first edge set materializes
+    val roll = new graft.functions.Cp.Rolling(s)
+    val und = roll(jaccardPairs(s, d)
       .filter(lit(3) * $"inter" > $"na" + $"nb")
-      .select($"doc_a", $"doc_b")
-    val sc = s.sparkContext
-    val before0 = sc.getPersistentRDDs.keySet
-    var e = und.select($"doc_a".as("u"), $"doc_b".as("v"))
+      .select($"doc_a", $"doc_b"))
+    var e = roll(und.select($"doc_a".as("u"), $"doc_b".as("v"))
       .union(und.select($"doc_b".as("u"), $"doc_a".as("v")))
-      .transform(graft.functions.Cp.local)
-    // generation 0 owns the upstream pair-pipeline checkpoints too —
-    // all dead once generation 1 materializes
-    var prevGen: scala.collection.Set[Int] =
-      sc.getPersistentRDDs.keySet -- before0
+      .transform(graft.functions.Cp.local))
     for (_ <- 0 until KcorePeels) {
       val keep = e.groupBy($"u").agg(count(lit(1)).as("dg"))
         .filter($"dg" >= KcoreK).select($"u")
-      val beforeR = sc.getPersistentRDDs.keySet
-      e = e.join(keep, Seq("u"), "left_semi")
+      e = roll(e.join(keep, Seq("u"), "left_semi")
         .join(keep.select($"u".as("v")), Seq("v"), "left_semi")
-        .transform(graft.functions.Cp.local) // eager: the previous generation is now dead
-      val newGen = sc.getPersistentRDDs.keySet -- beforeR
-      dropGeneration(s, prevGen)
-      prevGen = newGen
+        .transform(graft.functions.Cp.local))
     }
     e.select($"u".as("doc_id")).distinct()
       .join(Tables.documents(s, d).select($"doc_id", $"source"),
@@ -1340,10 +1323,9 @@ object Dedup {
     * rounds. */
   def qLabelProp(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val und = jaccardPairs(s, d)
+    val (und, pairGen) = graft.functions.Cp.owned(jaccardPairs(s, d)
       .filter(lit(3) * $"inter" > $"na" + $"nb")
-      .select($"doc_a", $"doc_b")
-    val sc = s.sparkContext
+      .select($"doc_a", $"doc_b"))
     // the edge table is LIVE for every round — it must not join the
     // per-round label generations that get dropped (unlike qKcore,
     // where edges are replaced each round). A clustered+sorted-on-u
@@ -1354,24 +1336,23 @@ object Dedup {
     val e = und.select($"doc_a".as("u"), $"doc_b".as("v"))
       .union(und.select($"doc_b".as("u"), $"doc_a".as("v")))
       .transform(graft.functions.Cp.local)
-    var prevGen: scala.collection.Set[Int] = Set.empty
+    // the pair pipeline (nothing inside withSharedPairs) is dead once
+    // `e` has materialized
+    graft.functions.Cp.dropGeneration(s, pairGen)
+    val roll = new graft.functions.Cp.Rolling(s)
     var lab = e.select($"u".as("node")).distinct()
       .select($"node", $"node".as("label"))
     var changedLast = 0L
     for (_ <- 1 to LpRounds) {
       val nbr = e.join(lab.select($"node".as("u"), $"label"), Seq("u"))
         .groupBy($"v".as("node")).agg(min($"label").as("nl"))
-      val beforeR = sc.getPersistentRDDs.keySet
-      val next = lab.join(nbr, Seq("node"), "left")
+      val next = roll(lab.join(nbr, Seq("node"), "left")
         .select($"node",
           least($"label", coalesce($"nl", $"label")).as("label"),
           ($"nl".isNotNull && $"nl" < $"label").cast("long").as("chg"))
-        .transform(graft.functions.Cp.local)
+        .transform(graft.functions.Cp.local))
       changedLast = next.agg(sum($"chg")).as[Long].head()
       lab = next.select($"node", $"label")
-      val newGen = sc.getPersistentRDDs.keySet -- beforeR
-      dropGeneration(s, prevGen)
-      prevGen = newGen
     }
     val comms = lab.groupBy($"label")
       .agg(count(lit(1)).as("csize"),

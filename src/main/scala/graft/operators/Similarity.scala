@@ -827,18 +827,16 @@ object Similarity {
                        carryVectors: Boolean): DataFrame = {
     val s = q.sparkSession
     import s.implicits._
-    val sc = s.sparkContext
-    var before = sc.getPersistentRDDs.keySet
+    val roll = new graft.functions.Cp.Rolling(s)
     val v0 = q.crossJoin(broadcast(ent))
-    var visited = (
+    var visited = roll((
       if (carryVectors)
         v0.select($"query_id", $"qv", $"vec_id", $"rv",
           cosineFast($"qv", $"rv").as("cos"))
       else
         v0.select($"query_id", $"vec_id",
           cosineFast($"qv", $"rv").as("cos"))
-    ).transform(graft.functions.Cp.local)
-    var gen = sc.getPersistentRDDs.keySet -- before
+    ).transform(graft.functions.Cp.local))
     for (_ <- 1 to GraphHops) {
       val wb = Window.partitionBy($"query_id")
         .orderBy($"cos".desc, $"vec_id".asc)
@@ -885,12 +883,7 @@ object Similarity {
       )
         .join(visited.select($"query_id", $"vec_id"),
           Seq("query_id", "vec_id"), "left_anti")
-      before = sc.getPersistentRDDs.keySet
-      val next = graft.functions.Cp.local(visited.unionByName(expanded))
-      val newGen = sc.getPersistentRDDs.keySet -- before
-      graft.functions.Cp.dropGeneration(s, gen) // superseded generation
-      gen = newGen
-      visited = next
+      visited = roll(graft.functions.Cp.local(visited.unionByName(expanded)))
     }
     visited
   }

@@ -1347,11 +1347,11 @@ object TextAnalysis {
     * vocabulary-bounded (pairs ≤ vocab × max word length) with the
     * 1-row best pair applied as a broadcast nested-loop join. Rounds
     * are checkpointed serialized and the superseded generation dropped
-    * ([[graft.functions.Cp.dropGeneration]]) — at most two generations
-    * live. Output: one row per round with the chosen pair, its
-    * weighted count, and a bit_xor-of-md5 checksum over every word's
-    * post-merge symbol sequence, so the oracle match proves EVERY
-    * word's segmentation after every round, not just the argmax. */
+    * ([[graft.functions.Cp.Rolling]]) — at most two generations live.
+    * Output: one row per round with the chosen pair, its weighted
+    * count, and a bit_xor-of-md5 checksum over every word's post-merge
+    * symbol sequence, so the oracle match proves EVERY word's
+    * segmentation after every round, not just the argmax. */
   def qBpeMerge(s: SparkSession, d: String): DataFrame =
     bpeTrain(s, d)._1
 
@@ -1359,48 +1359,43 @@ object TextAnalysis {
     * and [[qBpeApply]] (final word → symbol-sequence vocabulary). */
   private def bpeTrain(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     import s.implicits._
-    val sc = s.sparkContext
-    val before0 = sc.getPersistentRDDs.keySet
+    val roll = new graft.functions.Cp.Rolling(s)
     val words = Tables.documents(s, d)
       .select(explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
         .as("word"))
       .groupBy($"word").agg(count(lit(1)).as("n"))
-    var seqs = words
+    var seqs = roll(words
       .select($"word", $"n",
         expr("trim(regexp_replace(word, '(.)', '$1  '))").as("seq"))
-      .transform(graft.functions.Cp.local)
-    var prevGen: scala.collection.Set[Int] =
-      sc.getPersistentRDDs.keySet -- before0
+      .transform(graft.functions.Cp.local))
     val rounds = (1 to BpeRounds).map { r =>
-      val beforeR = sc.getPersistentRDDs.keySet
       val pairs = seqs
         .withColumn("toks", split($"seq", "  "))
         .select($"n", explode(expr(
           "transform(slice(toks, 1, size(toks) - 1), " +
             "(t, i) -> concat(t, ' ', element_at(toks, i + 2)))")).as("pair"))
         .groupBy($"pair").agg(sum($"n").as("cnt"))
-      val best = pairs.orderBy($"cnt".desc, $"pair".asc).limit(1)
-        .transform(graft.functions.Cp.local) // 1 row; pins the round's argmax
-      seqs = seqs.crossJoin(broadcast(best.select($"pair".as("__p"))))
-        .select($"word", $"n",
-          expr("trim(replace(' ' || seq || ' ', " +
-            "' ' || replace(__p, ' ', '  ') || ' ', " +
-            "' ' || replace(__p, ' ', '') || ' '))").as("seq"))
-        .transform(graft.functions.Cp.local)
-      val midR = sc.getPersistentRDDs.keySet
+      val (best, next) = roll {
+        val best = pairs.orderBy($"cnt".desc, $"pair".asc).limit(1)
+          .transform(graft.functions.Cp.local) // 1 row; pins the round's argmax
+        (best, seqs.crossJoin(broadcast(best.select($"pair".as("__p"))))
+          .select($"word", $"n",
+            expr("trim(replace(' ' || seq || ' ', " +
+              "' ' || replace(__p, ' ', '  ') || ' ', " +
+              "' ' || replace(__p, ' ', '') || ' '))").as("seq"))
+          .transform(graft.functions.Cp.local))
+      }
+      seqs = next
       val chk = seqs.agg(
         bit_xor(md5Prefix60(concat($"word", lit(">"), $"seq")))
           .as("vocab_checksum"))
-      // the round's 1-row report is checkpointed EAGERLY so dropping
-      // the superseded sequence generation can never cut its lineage
-      val out = best.crossJoin(chk)
+      // the round's 1-row report is checkpointed EAGERLY, outside the
+      // rolled generation, so dropping that generation one round later
+      // can never cut its lineage
+      best.crossJoin(chk)
         .select(lit(r).as("round"), $"pair".as("best_pair"),
           $"cnt".as("pair_count"), $"vocab_checksum")
         .transform(graft.functions.Cp.local)
-      val outIds = sc.getPersistentRDDs.keySet -- midR
-      graft.functions.Cp.dropGeneration(s, prevGen)
-      prevGen = (midR -- beforeR) -- outIds
-      out
     }
     (rounds.reduce(_ union _).orderBy($"round".asc), seqs)
   }

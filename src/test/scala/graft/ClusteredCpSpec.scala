@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Mechanics of the partitioning-preserving checkpoints
+/** Mechanics of the house checkpoints. Partitioning-preserving ones
   * (Cp.localClustered / Cp.localClusteredAs / Bridge.claimClustered):
   * results must be bit-identical to the plain checkpoint path, the
   * declared layout must actually eliminate exchanges (and sorts, when
@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * (LogicalRDD.newInstance must remap the partitioning attributes on
   * dedup — if Spark ever stops doing that, the exchange reappears and
   * this spec fails before a silent perf regression ships), and a
-  * false/misapplied claim must be rejected loudly. */
+  * false/misapplied claim must be rejected loudly. Generation scopes
+  * (Cp.scoped / Cp.owned): a scope owns only the checkpoints taken on
+  * its own thread, so exiting it never drops a concurrent query's. */
 class ClusteredCpSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -66,5 +68,54 @@ class ClusteredCpSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       org.apache.spark.sql.graft.Bridge.claimClustered(ck, 8, Seq("nope"))
     }
+  }
+
+  private def persisted = spark.sparkContext.getPersistentRDDs.keySet
+
+  private def rddId(df: org.apache.spark.sql.Dataset[_]): Int =
+    df.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+
+  test("a scope drops its own thread's checkpoints, never another thread's") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    @volatile var scopedId = -1
+    @volatile var failure: Throwable = null
+    val a = new Thread(() =>
+      try graft.functions.Cp.scoped(spark) {
+        scopedId = rddId(graft.functions.Cp.local(spark.range(0, 10).toDF()))
+        entered.countDown()
+        assert(release.await(60, TimeUnit.SECONDS))
+      } catch { case t: Throwable => failure = t; entered.countDown() })
+    a.start()
+    assert(entered.await(60, TimeUnit.SECONDS))
+    // checkpointed on THIS thread while thread A's scope is open
+    val mine = graft.functions.Cp.local(spark.range(0, 1000).toDF())
+    val id = rddId(mine)
+    assert(persisted.contains(id))
+    release.countDown()
+    a.join(60000)
+    assert(failure == null, s"thread A failed: $failure")
+    assert(!persisted.contains(scopedId),
+      "the scope must drop the checkpoint its own thread took")
+    assert(persisted.contains(id),
+      "the scope dropped a checkpoint another thread took")
+    assert(mine.count() === 1000)
+    graft.functions.Cp.dropGeneration(spark, Set(id))
+  }
+
+  test("owned reports the ids its body checkpointed, nested scopes included") {
+    val ((a, innerIds), ids) = graft.functions.Cp.owned {
+      val a = graft.functions.Cp.local(spark.range(0, 10).toDF())
+      val (_, inner) = graft.functions.Cp.owned(
+        graft.functions.Cp.localClustered(mkDf.toDF(), 8, Seq("k")))
+      (a, inner)
+    }
+    assert(innerIds.size === 1)
+    assert(ids === innerIds + rddId(a))
+    assert(ids.subsetOf(persisted))
+    graft.functions.Cp.dropGeneration(spark, ids)
+    assert(ids.intersect(persisted).isEmpty)
   }
 }

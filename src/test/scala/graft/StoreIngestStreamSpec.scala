@@ -39,28 +39,52 @@ class StoreIngestStreamSpec extends AnyFunSuite {
   private def contents(t: String): Seq[String] =
     spark.table(t).collect().map(_.toString).sorted.toSeq
 
+  private val docCols = Seq("doc_id", "text", "lang", "source", "n_chars")
+
+  /** Fresh corpus dirs over the test SF's documents, stores dropped. */
+  private def freshDocDirs(dirs: String*): Unit = {
+    val base = spark.read.parquet(TestSpark.sf + "/documents.parquet")
+    dirs.foreach(d => base.write.mode("overwrite")
+      .parquet(d + "/documents.parquet"))
+    dirs.flatMap(docStores).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  /** The batch-API twin: `batches` through the Scala appends, in order;
+    * then every streamed store must equal its twin row-for-row. */
+  private def assertEqualsBatchTwin(dirS: String, dirB: String,
+      batches: Seq[Seq[(Long, String, String, String, Long)]]): Unit = {
+    operators.Dedup.ensureFpStore(spark, dirB)
+    operators.Dedup.ensureBandStore(spark, dirB)
+    operators.TextAnalysis.ensureAnchorStore(spark, dirB)
+    batches.map(_.toDF(docCols: _*)).foreach { b =>
+      operators.Dedup.appendFpStore(spark, dirB, b)
+      operators.Dedup.appendBandStore(spark, dirB, b)
+      operators.TextAnalysis.appendAnchorStore(spark, dirB, b)
+    }
+    docStores(dirB).foreach(spark.catalog.refreshTable)
+    docStores(dirS).zip(docStores(dirB)).foreach { case (s, b) =>
+      assert(contents(s) === contents(b),
+        s"streamed store $s must equal batch twin $b row-for-row")
+    }
+  }
+
   test("storeIngest: batches land once, verbatim replay is a no-op, " +
        "stores equal the batch-API twin") {
     val dirS = "/tmp/graft_streamingest_s" // streaming side
     val dirB = "/tmp/graft_streamingest_b" // batch-API twin
-    val base = spark.read.parquet(TestSpark.sf + "/documents.parquet")
-    Seq(dirS, dirB).foreach(d => base.write.mode("overwrite")
-      .parquet(d + "/documents.parquet"))
-    (docStores(dirS) ++ docStores(dirB))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    freshDocDirs(dirS, dirB)
 
     // batch 1: 8 novel docs; batch 2: 4 VERBATIM cross-batch
     // duplicates of batch 1 (must be anti-joined away) + 4 novel
     val b1 = docRows(9000001L to 9000008L, "a")
     val b2 = b1.take(4) ++ docRows(9000009L to 9000012L, "b")
-    val cols = Seq("doc_id", "text", "lang", "source", "n_chars")
 
     val in = MemoryStream[(Long, String, String, String, Long)](spark)
     // compactEvery=2 → the second micro-batch triggers compaction:
     // the equality asserts below also prove compaction is content-
     // preserving (the twin never compacts)
     val q = StreamingOps.storeIngest(
-      in.toDF().toDF(cols: _*), dirS, compactEvery = 2).start()
+      in.toDF().toDF(docCols: _*), dirS, compactEvery = 2).start()
     val afterTwo = try {
       in.addData(b1: _*); q.processAllAvailable()
       in.addData(b2: _*); q.processAllAvailable()
@@ -77,22 +101,43 @@ class StoreIngestStreamSpec extends AnyFunSuite {
     assert(afterTwo.forall(_ > 0))
 
     // batch-API twin: same two batches through the Scala appends
-    val b1df = b1.toDF(cols: _*)
-    val b2df = b2.toDF(cols: _*)
-    operators.Dedup.ensureFpStore(spark, dirB)
-    operators.Dedup.ensureBandStore(spark, dirB)
-    operators.TextAnalysis.ensureAnchorStore(spark, dirB)
-    operators.Dedup.appendFpStore(spark, dirB, b1df)
-    operators.Dedup.appendBandStore(spark, dirB, b1df)
-    operators.TextAnalysis.appendAnchorStore(spark, dirB, b1df)
-    operators.Dedup.appendFpStore(spark, dirB, b2df)
-    operators.Dedup.appendBandStore(spark, dirB, b2df)
-    operators.TextAnalysis.appendAnchorStore(spark, dirB, b2df)
-    docStores(dirB).foreach(spark.catalog.refreshTable)
-    docStores(dirS).zip(docStores(dirB)).foreach { case (s, b) =>
-      assert(contents(s) === contents(b),
-        s"streamed store $s must equal batch twin $b row-for-row")
-    }
+    assertEqualsBatchTwin(dirS, dirB, Seq(b1, b2))
+  }
+
+  test("storeIngest alongside serving queries: neither drops the " +
+       "other's checkpoints") {
+    // ingest and serving share one SparkContext (one application);
+    // every micro-batch's scoped checkpoints and every serving query's
+    // rolled generations are taken on different threads at once
+    val dirS = "/tmp/graft_streamingest_cs"
+    val dirB = "/tmp/graft_streamingest_cb"
+    freshDocDirs(dirS, dirB)
+    def serve(): Seq[String] = operators.Dedup.qKcore(spark, TestSpark.sf)
+      .collect().map(_.toString).sorted.toSeq
+    val serial = serve()
+
+    val b1 = docRows(9100001L to 9100008L, "c")
+    val b2 = b1.take(4) ++ docRows(9100009L to 9100012L, "d")
+    val b3 = b2.takeRight(2) ++ docRows(9100013L to 9100016L, "e")
+    val in = MemoryStream[(Long, String, String, String, Long)](spark)
+    val q = StreamingOps.storeIngest(
+      in.toDF().toDF(docCols: _*), dirS, compactEvery = 2).start()
+    val served = try Seq(b1, b2, b3).flatMap { b =>
+      in.addData(b: _*)
+      // a waiter thread blocks on the stream; this thread serves until
+      // the micro-batch has committed (at least once per batch)
+      val drained = new Thread(() => q.processAllAvailable())
+      drained.start()
+      val out = scala.collection.mutable.ListBuffer(serve())
+      while (drained.isAlive) out += serve()
+      drained.join()
+      out
+    } finally q.stop()
+    assert(q.exception.isEmpty, s"ingest failed: ${q.exception}")
+    served.foreach(r => assert(r === serial,
+      "a serving result changed while the stream ingested"))
+    docStores(dirS).foreach(spark.catalog.refreshTable)
+    assertEqualsBatchTwin(dirS, dirB, Seq(b1, b2, b3))
   }
 
   test("vectorStoreIngest: graph+ivf grow once and replay is a no-op") {
